@@ -208,9 +208,7 @@ object Bench {
         // comparisons across that boundary carry a ~1-3 s (at 100x)
         // definitional delta on top of any real change.
         val sec = (System.nanoTime() - t0) / 1e9
-        CacheScope.drain()
-        spark.catalog.clearCache()
-        System.gc()
+        CacheScope.barrier(spark)
         recordSnap("memo_build_shared", snap0)
         Seq("memo_build_shared" -> (if (ok) sec else -1.0))
       }
@@ -269,9 +267,7 @@ object Bench {
         // CacheScope.drain() is the engine's own lifecycle (unpersists
         // operator-registered frames); clearCache() remains as a belt-
         // and-braces sweep for anything cached outside the registry.
-        CacheScope.drain()
-        spark.catalog.clearCache()
-        System.gc()
+        CacheScope.barrier(spark)
         // metric delta read AFTER the barrier: the explicit GC gives the
         // listener bus time to drain the window's late task-end events,
         // and no tasks run inside the barrier itself, so the window's

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Query-scoped lifecycle for persisted intermediates.
@@ -47,5 +47,14 @@ object CacheScope {
       catch { case _: Throwable => () } // session already stopped — nothing to free
       ds = pending.poll()
     }
+  }
+
+  /** The cleanup barrier between two timed windows: [[drain]] the
+    * registry, clear anything cached outside it, and collect the freed
+    * blocks now instead of inside the next window. */
+  def barrier(spark: SparkSession): Unit = {
+    drain()
+    spark.catalog.clearCache()
+    System.gc()
   }
 }

@@ -31,12 +31,6 @@ object ProbeDelta {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def barrier(spark: SparkSession): Unit = {
-    CacheScope.drain()
-    spark.catalog.clearCache()
-    System.gc()
-  }
-
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.01", "/root/testdata/sf0.1")
@@ -75,7 +69,7 @@ object ProbeDelta {
         }
         val rows = dm.count()
         println(f"| $d | $nStore | ${buildSec}%.1f | $nDelta (mod $m) | $sec%.2f | $rows |")
-        barrier(spark)
+        CacheScope.barrier(spark)
       }
       // leg 2: fixed-size delta (corpus-independence)
       val fixed = docs.filter(col("doc_id") % mod === 0).limit(500)
@@ -85,7 +79,7 @@ object ProbeDelta {
           .write.format("noop").mode("overwrite").save()
       }
       println(f"| $d | $nStore | ${buildSec}%.1f | $nFixed (fixed 500) | $sec%.2f | - |")
-      barrier(spark)
+      CacheScope.barrier(spark)
     }
     spark.stop()
   }

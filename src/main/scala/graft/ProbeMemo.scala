@@ -17,12 +17,6 @@ import org.apache.spark.sql.SparkSession
   */
 object ProbeMemo {
 
-  private def barrier(spark: SparkSession): Unit = {
-    CacheScope.drain()
-    spark.catalog.clearCache()
-    System.gc()
-  }
-
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -42,7 +36,7 @@ object ProbeMemo {
       val t0 = System.nanoTime()
       f
       println(f"[probe.memo] $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      barrier(spark)
+      CacheScope.barrier(spark)
     }
     import graft.pipeline._
     t("signatures_noop") {

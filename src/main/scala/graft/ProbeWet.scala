@@ -187,7 +187,7 @@ object ProbeWet {
           graft.sources.WarcWet.asDocs(spark, full.getAbsolutePath), cfg, outDir)
           .collect().head.getAs[Long]("docs_ingested")
       }
-      CacheScope.drain(); spark.catalog.clearCache(); System.gc()
+      CacheScope.barrier(spark)
       (n, sec)
     }
     val cFull = GraftConfig(quality = Quality.Config.reference)

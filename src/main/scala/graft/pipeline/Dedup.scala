@@ -107,6 +107,19 @@ object Dedup {
   /** A line is boilerplate once it appears in this many distinct docs. */
   val LineDropDf = 2
 
+  /** Broadcast bound for the boilerplate-line DROP SET, in estimated
+    * driver-heap bytes: the entries' UTF-8 bytes plus
+    * [[LineDropEntryBytes]] per entry. 128 MB holds the 1M ~60-char
+    * lines the round-18 row cap was sized for, while a paragraph-mode
+    * set (each entry a whole paragraph) or a set of many tiny lines
+    * stays bounded; beyond it the drop join falls back to the shuffled
+    * semi join (AQE skew-splits it). */
+  val LineDropBytesMax: Long = 128L << 20
+
+  /** Per-entry heap charge of the collected drop set: the String and
+    * its backing array headers plus the HashSet node. */
+  private val LineDropEntryBytes = 64L
+
   /** Cross-document LINE-level dedup (Dolma / RefinedWeb boilerplate
     * removal): a line appearing in >= [[LineDropDf]] DISTINCT documents
     * is dropped from every document; each doc is rebuilt from its
@@ -124,17 +137,14 @@ object Dedup {
     * lines participate like any other (an empty line shared by >= 2
     * docs drops); order is restored by sorting (pos, line) structs, so
     * the rebuild is collect-order-independent — deterministic under any
-    * partitioning. */
-  /** Broadcast bound for the boilerplate-line DROP SET (round 18):
-    * ~60-char lines × 1M ≈ 60 MB framed — comfortably broadcastable;
-    * beyond it the drop join falls back to the shuffled semi join
-    * (AQE skew-splits it). Env-overridable for A/B probes (0 disables
-    * the broadcast path). */
-  val LineDropKeysMax: Long =
-    sys.env.get("SPARK_GRAFT_LINE_DROP_MAX").map(_.toLong).getOrElse(1000000L)
-
+    * partitioning.
+    *
+    * Not a pure plan builder: building the frame runs eager Spark jobs
+    * over the corpus (materializing the drop set with its size probe,
+    * then collecting and broadcasting it when it fits
+    * `dropBroadcastMax` bytes), so the path is fixed at build time. */
   def lineDedupQuery(docs: DataFrame, sep: String = "\n",
-      dropBroadcastMax: Long = LineDropKeysMax): DataFrame = {
+      dropBroadcastMax: Long = LineDropBytesMax): DataFrame = {
     // Round-18 reshape (guide §2.3 / §8 "decide with small rows"): the
     // old spelling shipped the exploded LINE TEXT through three
     // corpus-width exchanges — the df-count aggregation, the
@@ -146,7 +156,7 @@ object Dedup {
     // the dropped positions: so ship text through ONE exchange (the
     // df-count partials, skew-spread by its (line, doc_id) distinct
     // stage), semi-join the exploded lines against the broadcast drop
-    // set map-side (count-probed against [[LineDropKeysMax]]; an
+    // set map-side (size-probed against [[LineDropBytesMax]]; an
     // adversarial corpus falls back to the shuffled semi join, which
     // AQE skew-splits), shuffle only the dropped (doc_id, pos) pairs,
     // and rebuild each doc from its own `text` in one linear kernel
@@ -161,8 +171,11 @@ object Dedup {
         .agg(countDistinct(col("doc_id")).as("line_df"))
         .filter(col("line_df") >= LineDropDf)
         .select(col("line")))
-    if (dropSet.count() <= dropBroadcastMax) {
-      // The whole decision fits the driver (count-probed): ship it as a
+    // One probe job for both sizes: entries and their UTF-8 bytes.
+    val size = dropSet.agg(count(lit(1)),
+      coalesce(sum(octet_length(col("line"))), lit(0L))).head()
+    if (size.getLong(1) + size.getLong(0) * LineDropEntryBytes <= dropBroadcastMax) {
+      // The whole decision fits the driver (size-probed): ship it as a
       // broadcast SET into the rebuild kernel — the main query is then a
       // bare docs scan + one narrow kernel pass, no second explode, no
       // join, no exchange at all (the [[bloomNewDocs]] scan-local-probe

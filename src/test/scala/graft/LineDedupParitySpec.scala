@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 import graft.pipeline.Dedup
 
@@ -8,7 +10,8 @@ import graft.pipeline.Dedup
   * semi-join + kernel rebuild from the original text) row-for-row
   * against the pre-round-18 spelling (lines ⋈ lineDf join +
   * collect_list(struct(pos, line)) rebuild), on BOTH drop-join paths
-  * (broadcast and shuffled fallback), for lines and paragraphs. The
+  * (broadcast and shuffled fallback), for lines and paragraphs, and
+  * checks that the broadcast bound counts bytes, not entries. The
   * fixture covers: boilerplate lines shared across many docs, empty
   * lines (shared ⇒ dropped), docs losing EVERY line, docs losing none,
   * single-line docs, and trailing separators (split keeps trailing
@@ -65,6 +68,18 @@ class LineDedupParitySpec extends SparkSpec {
       val d = docsDf(sep)
       assert(collected(Dedup.lineDedupQuery(d, sep, dropBroadcastMax = 0L)) ===
         collected(oldLineDedup(d, sep)))
+    }
+    test(s"$label dedup: a cap above the drop set's entry count but below its bytes shuffles") {
+      val d = docsDf(sep)
+      // the fixture's drop set is 3 entries (boilerplate, nav, empty)
+      // holding 61 bytes of text: a 10-byte cap must refuse the broadcast
+      val q = Dedup.lineDedupQuery(d, sep, dropBroadcastMax = 10L)
+      assert(collected(q) === collected(oldLineDedup(d, sep)))
+      val plan = q.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }
+      assert(plan.find(_.isInstanceOf[BaseJoinExec]).isDefined, plan.treeString)
     }
   }
 
