@@ -18,7 +18,7 @@ import graft.Tables
   * is vocabulary-sized, not corpus-sized (at 100 TB: cap the lexicon at
   * the top ~1M words; tail words back off to char encoding via <unk>-free
   * char symbols). Encoding is a deterministic per-row UDF, embarrassingly
-  * parallel.
+  * parallel, that memoizes per-word encodes within each task.
   *
   * Determinism: pair selection breaks ties by (count DESC, pair ASC);
   * vocab ids are specials, then sorted chars, then merges in creation
@@ -62,10 +62,11 @@ object Bpe {
       syms.map(s => vocab.getOrElse(s, UnkId)).toArray
     }
 
+    @transient private lazy val rev: Map[Int, String] = vocab.map(_.swap)
+
     /** T5: decode ids back to text (lossy on unknown ids, like the
       * reference acknowledges at tests/test_pipeline.py:220). */
     def decode(ids: Seq[Int]): String = {
-      val rev = vocab.map(_.swap)
       ids.map(rev.getOrElse(_, "<unk>")).mkString("")
         .replace(EndOfWord, " ").trim
     }
@@ -104,120 +105,273 @@ object Bpe {
     Model(vb.result(), mb.result())
   }
 
-  /** T1+T2: train from a frequency-weighted lexicon (driver-side loop).
+  /** T1+T2: train from a frequency-weighted lexicon (driver-side loop;
+    * frequencies are positive, as the word-count aggregation yields).
     *
     * Incremental pair-count maintenance (the same asymptotics as the
     * published subword-nmt `learn_bpe` fast path): pair counts and a
-    * pair→word inverted index are built once; each merge then touches
-    * ONLY the words containing the merged pair, applying the exact
-    * before/after pair-bag diff of each rewritten word. Selection uses a
-    * max-heap with lazy invalidation (an entry is valid iff its count
-    * still matches the live count), so each merge is
-    * O(occurrences + log #pairs) instead of a full lexicon recount —
-    * vocab_size=32000 over a 100k-word lexicon trains in seconds where
-    * the naive recount loop (O(vocab × lexicon chars)) took hours.
-    * Selection order (count DESC, pair ASC) and therefore the learned
-    * merge list are bit-identical to the recount spelling. */
+    * pair→word posting list are built once; each merge then touches ONLY
+    * the words containing the merged pair, applying the exact before/after
+    * diff of each rewritten word's sorted pair array. Symbols are interned
+    * as ints (equal strings share one id) and a pair is one `Long` key, so
+    * the loop allocates no tuples or per-word maps. Selection uses a
+    * max-heap whose entries are upper bounds: an entry is pushed only when
+    * a pair's count rises, and a popped entry above the live count is
+    * pushed again at the live count, so the first popped entry that
+    * matches its live count is the true maximum. Each merge is
+    * O(occurrences + log #pairs) instead of a full lexicon recount.
+    * Selection order (count DESC, pair strings ASC) and therefore the
+    * learned model are bit-identical to the naive recount spelling
+    * (BpeTrainScaleSpec). */
   def train(wordFreq: Map[String, Long], vocabSize: Int, minFreq: Long = 2L): Model = {
-    val words: Array[(mutable.ArrayBuffer[String], Long)] =
-      wordFreq.toArray.sortBy(_._1).map { case (w, f) =>
-        (mutable.ArrayBuffer(w.map(_.toString): _*) += EndOfWord, f)
-      }
+    val lexicon = wordFreq.toArray.sortBy(_._1)
+    val seen = new java.util.BitSet(Char.MaxValue + 1)
+    lexicon.foreach { case (w, _) => w.foreach(c => seen.set(c.toInt)) }
     val chars: Seq[String] =
-      (words.flatMap(_._1).distinct.sorted).toSeq
-
-    val counts = mutable.Map.empty[(String, String), Long]
-    val where = mutable.Map.empty[(String, String), mutable.Set[Int]]
-    // heap of (count-at-push, pair); max by count, ties prefer smallest pair
-    val heap = mutable.PriorityQueue.empty[(Long, String, String)](
-      new Ordering[(Long, String, String)] {
-        def compare(x: (Long, String, String), y: (Long, String, String)): Int = {
-          val c = java.lang.Long.compare(x._1, y._1)
-          if (c != 0) c
-          else {
-            val a = y._2.compareTo(x._2) // reversed: smaller pair = greater
-            if (a != 0) a else y._3.compareTo(x._3)
-          }
-        }
-      })
-
-    def pairBag(syms: mutable.ArrayBuffer[String]): mutable.Map[(String, String), Int] = {
-      val bag = mutable.Map.empty[(String, String), Int]
-      var i = 0
-      while (i < syms.length - 1) {
-        val p = (syms(i), syms(i + 1))
-        bag(p) = bag.getOrElse(p, 0) + 1
-        i += 1
-      }
-      bag
-    }
-
-    words.zipWithIndex.foreach { case ((syms, f), wi) =>
-      pairBag(syms).foreach { case (p, n) =>
-        counts(p) = counts.getOrElse(p, 0L) + n * f
-        where.getOrElseUpdate(p, mutable.Set.empty) += wi
-      }
-    }
-    counts.foreach { case ((a, b), c) => heap.enqueue((c, a, b)) }
-
-    val merges = List.newBuilder[(String, String)]
-    var learned = 0
+      ((if (lexicon.isEmpty) Nil else Seq(EndOfWord)) ++
+        seen.stream().toArray.toSeq.map(_.toChar.toString)).sorted
+    val trainer = new Trainer(chars, lexicon)
     val target = math.max(0, vocabSize - (Specials.size + chars.size))
-    var exhausted = false
-    while (learned < target && !exhausted) {
-      // pop to the first non-stale entry
-      var best: Option[(Long, String, String)] = None
-      while (best.isEmpty && heap.nonEmpty) {
-        val e = heap.dequeue()
-        if (counts.get((e._2, e._3)).contains(e._1)) best = Some(e)
-      }
-      best match {
-        case None => exhausted = true
-        case Some((bestCount, _, _)) if bestCount < minFreq => exhausted = true
-        case Some((_, a, b)) =>
-          val bestPair = (a, b)
-          merges += bestPair
-          learned += 1
-          val mergedSym = a + b
-          // only words actually containing the pair; the index may hold
-          // stale entries (pair long gone from a rewritten word) — the
-          // before-bag check below makes them harmless no-ops.
-          val touched = where.getOrElse(bestPair, mutable.Set.empty).toArray
-          touched.foreach { wi =>
-            val (syms, f) = words(wi)
-            val before = pairBag(syms)
-            if (before.contains(bestPair)) {
-              var i = 0
-              while (i < syms.length - 1) {
-                if (syms(i) == a && syms(i + 1) == b) {
-                  syms(i) = mergedSym
-                  syms.remove(i + 1)
-                } else i += 1
-              }
-              val after = pairBag(syms)
-              // exact diff: decrement vanished pairs, increment created ones
-              (before.keySet ++ after.keySet).foreach { p =>
-                val delta = (after.getOrElse(p, 0) - before.getOrElse(p, 0)).toLong * f
-                if (delta != 0) {
-                  val c = counts.getOrElse(p, 0L) + delta
-                  if (c <= 0) counts.remove(p)
-                  else {
-                    counts(p) = c
-                    heap.enqueue((c, p._1, p._2))
-                    if (delta > 0) where.getOrElseUpdate(p, mutable.Set.empty) += wi
-                  }
-                }
-              }
-            }
-          }
-          counts.remove(bestPair)
-          where.remove(bestPair)
-      }
-    }
-    val mergeList = merges.result()
+    val mergeList = trainer.merges(target, minFreq)
     val symbols = chars ++ mergeList.map { case (a, b) => a + b }
     val vocab = (Specials ++ symbols.distinct).zipWithIndex.toMap
     Model(vocab, mergeList)
+  }
+
+  /** The state of one [[train]] run. Words are arrays of symbol ids; every
+    * adjacent pair ever seen owns a dense slot holding its key (left id in
+    * the high word), its live count (0 = absent) and a posting list of the
+    * words that gained it (possibly stale or repeated: a word is rewritten
+    * only if it still holds the pair). */
+  private final class Trainer(chars: Seq[String], lexicon: Array[(String, Long)]) {
+    private val symStr = mutable.ArrayBuffer.empty[String]
+    private val symId = mutable.HashMap.empty[String, Int]
+    private def intern(s: String): Int = symId.getOrElseUpdate(s, { symStr += s; symStr.size - 1 })
+    chars.foreach(intern)
+    private val charId = new Array[Int](Char.MaxValue + 1)
+    chars.foreach(c => if (c.length == 1) charId(c.charAt(0).toInt) = symId(c))
+
+    private val words = new Array[Array[Int]](lexicon.length)
+    private val lens = new Array[Int](lexicon.length)
+    private val freqs = new Array[Long](lexicon.length)
+
+    private var nSlots = 0
+    private var slotKey = new Array[Long](1024)
+    private var count = new Array[Long](1024)
+    private var post = new Array[Array[Int]](1024)
+    private var postLen = new Array[Int](1024)
+    // open addressing, key -> slot + 1 (0 = empty)
+    private var table = new Array[Int](2048)
+
+    private var heapCount = new Array[Long](1024)
+    private var heapSlot = new Array[Int](1024)
+    private var heapSize = 0
+
+    private val maxLen = lexicon.foldLeft(1)((m, wf) => math.max(m, wf._1.length + 1))
+    private val before = new Array[Long](maxLen)
+    private val after = new Array[Long](maxLen)
+
+    {
+      val eow = symId.getOrElse(EndOfWord, -1)
+      var wi = 0
+      while (wi < lexicon.length) {
+        val (w, f) = lexicon(wi)
+        val syms = new Array[Int](w.length + 1)
+        var i = 0
+        while (i < w.length) { syms(i) = charId(w.charAt(i).toInt); i += 1 }
+        syms(w.length) = eow
+        words(wi) = syms; lens(wi) = syms.length; freqs(wi) = f
+        i = 0
+        while (i < syms.length - 1) {
+          val s = slotOf(key(syms(i), syms(i + 1)))
+          count(s) += f
+          addPost(s, wi)
+          i += 1
+        }
+        wi += 1
+      }
+      var s = 0
+      while (s < nSlots) { if (count(s) > 0) push(count(s), s); s += 1 }
+    }
+
+    private def key(a: Int, b: Int): Long = (a.toLong << 32) | b.toLong
+
+    private def slotOf(k: Long): Int = {
+      if (2 * (nSlots + 1) > table.length) rehash(table.length * 2)
+      val i = probe(k)
+      if (table(i) != 0) table(i) - 1
+      else {
+        if (nSlots == slotKey.length) {
+          val n = nSlots * 2
+          slotKey = java.util.Arrays.copyOf(slotKey, n)
+          count = java.util.Arrays.copyOf(count, n)
+          post = java.util.Arrays.copyOf(post, n)
+          postLen = java.util.Arrays.copyOf(postLen, n)
+        }
+        slotKey(nSlots) = k
+        nSlots += 1
+        table(i) = nSlots
+        nSlots - 1
+      }
+    }
+
+    private def probe(k: Long): Int = {
+      val mask = table.length - 1
+      val h = k * 0x9E3779B97F4A7C15L
+      var i = ((h >>> 32) ^ h).toInt & mask
+      while (table(i) != 0 && slotKey(table(i) - 1) != k) i = (i + 1) & mask
+      i
+    }
+
+    private def rehash(size: Int): Unit = {
+      table = new Array[Int](size)
+      var s = 0
+      while (s < nSlots) { table(probe(slotKey(s))) = s + 1; s += 1 }
+    }
+
+    private def addPost(s: Int, wi: Int): Unit = {
+      val n = postLen(s)
+      var ws = post(s)
+      if (ws == null) { ws = new Array[Int](2); post(s) = ws }
+      if (n == 0 || ws(n - 1) != wi) {
+        if (n == ws.length) { ws = java.util.Arrays.copyOf(ws, n * 2); post(s) = ws }
+        ws(n) = wi
+        postLen(s) = n + 1
+      }
+    }
+
+    /** Heap order: count DESC, then pair strings ASC. Distinct slots hold
+      * distinct string pairs, so this is a total order on slots. */
+    private def above(c1: Long, s1: Int, c2: Long, s2: Int): Boolean =
+      c1 > c2 || (c1 == c2 && s1 != s2 && {
+        val k1 = slotKey(s1)
+        val k2 = slotKey(s2)
+        val c = symStr((k1 >>> 32).toInt).compareTo(symStr((k2 >>> 32).toInt))
+        c < 0 || (c == 0 && symStr(k1.toInt).compareTo(symStr(k2.toInt)) < 0)
+      })
+
+    private def push(c: Long, s: Int): Unit = {
+      if (heapSize == heapCount.length) {
+        heapCount = java.util.Arrays.copyOf(heapCount, heapSize * 2)
+        heapSlot = java.util.Arrays.copyOf(heapSlot, heapSize * 2)
+      }
+      var i = heapSize
+      heapSize += 1
+      while (i > 0 && above(c, s, heapCount((i - 1) >> 1), heapSlot((i - 1) >> 1))) {
+        val p = (i - 1) >> 1
+        heapCount(i) = heapCount(p); heapSlot(i) = heapSlot(p)
+        i = p
+      }
+      heapCount(i) = c; heapSlot(i) = s
+    }
+
+    private def popTop(): Unit = {
+      heapSize -= 1
+      val c = heapCount(heapSize)
+      val s = heapSlot(heapSize)
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        if (l >= heapSize) done = true
+        else {
+          val r = l + 1
+          val ch =
+            if (r < heapSize && above(heapCount(r), heapSlot(r), heapCount(l), heapSlot(l))) r else l
+          if (above(heapCount(ch), heapSlot(ch), c, s)) {
+            heapCount(i) = heapCount(ch); heapSlot(i) = heapSlot(ch)
+            i = ch
+          } else done = true
+        }
+      }
+      if (heapSize > 0) { heapCount(i) = c; heapSlot(i) = s }
+    }
+
+    /** The live pair with the highest (count, pair) order, or -1. */
+    private def best(): Int = {
+      var found = -1
+      while (found < 0 && heapSize > 0) {
+        val c = heapCount(0)
+        val s = heapSlot(0)
+        popTop()
+        val live = count(s)
+        if (live == c) found = s
+        else if (live > 0 && live < c) push(live, s)
+      }
+      found
+    }
+
+    def merges(target: Int, minFreq: Long): List[(String, String)] = {
+      val out = List.newBuilder[(String, String)]
+      var learned = 0
+      var exhausted = false
+      while (learned < target && !exhausted) {
+        val s = best()
+        if (s < 0 || count(s) < minFreq) exhausted = true
+        else {
+          val a = (slotKey(s) >>> 32).toInt
+          val b = slotKey(s).toInt
+          out += ((symStr(a), symStr(b)))
+          learned += 1
+          val m = intern(symStr(a) + symStr(b))
+          val ws = post(s)
+          val n = postLen(s)
+          post(s) = null
+          postLen(s) = 0
+          var i = 0
+          while (i < n) { rewrite(ws(i), a, b, m); i += 1 }
+          count(s) = 0
+        }
+      }
+      out.result()
+    }
+
+    private def pairs(w: Array[Int], len: Int, into: Array[Long]): Int = {
+      var i = 0
+      while (i < len - 1) { into(i) = key(w(i), w(i + 1)); i += 1 }
+      java.util.Arrays.sort(into, 0, math.max(0, len - 1))
+      math.max(0, len - 1)
+    }
+
+    /** Merge every (a, b) in word `wi` left to right into `m`, then apply
+      * the word's pair-count diff times its frequency. */
+    private def rewrite(wi: Int, a: Int, b: Int, m: Int): Unit = {
+      val w = words(wi)
+      val len = lens(wi)
+      var has = false
+      var i = 0
+      while (!has && i < len - 1) { has = w(i) == a && w(i + 1) == b; i += 1 }
+      if (has) {
+        val nb = pairs(w, len, before)
+        var r = 0
+        var o = 0
+        while (r < len) {
+          if (r < len - 1 && w(r) == a && w(r + 1) == b) { w(o) = m; r += 2 }
+          else { w(o) = w(r); r += 1 }
+          o += 1
+        }
+        lens(wi) = o
+        val na = pairs(w, o, after)
+        val f = freqs(wi)
+        var x = 0
+        var y = 0
+        while (x < nb || y < na) {
+          val k = if (y >= na || (x < nb && before(x) < after(y))) before(x) else after(y)
+          var d = 0L
+          while (x < nb && before(x) == k) { d -= 1; x += 1 }
+          while (y < na && after(y) == k) { d += 1; y += 1 }
+          if (d != 0) {
+            val ps = slotOf(k)
+            val c = count(ps) + d * f
+            if (c <= 0) count(ps) = 0
+            else {
+              count(ps) = c
+              if (d > 0) { push(c, ps); addPost(ps, wi) }
+            }
+          }
+        }
+      }
+    }
   }
 
   /** Default lexicon cap, raised 100k → 1M in round 6 (verdict #5): the
@@ -242,20 +396,22 @@ object Bpe {
 
   /** Distributed word-frequency aggregation feeding the driver loop.
     * `maxLexicon` bounds driver memory at any corpus size; the coverage
-    * numbers quantify what the cap dropped. One corpus aggregation,
-    * persisted for the two reads (total mass + top-k). */
+    * numbers quantify what the cap dropped. One corpus aggregation and
+    * one job: the top-k collect reads the aggregated frame once, and the
+    * total pair mass is an `observe` on that frame (the top-k consumes
+    * every aggregated row, so the observation sums all of them). */
   def wordFrequenciesWithCoverage(
       docs: DataFrame, maxLexicon: Int = MaxLexicon): LexiconCoverage = {
-    val freqs = docs.select(explode(split(col("text"), "[ \t\n\f\r]+")).as("w"))
+    val mass = org.apache.spark.sql.Observation()
+    val top = docs.select(explode(split(col("text"), "[ \t\n\f\r]+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("f"))
-      .transform(graft.CacheScope.persist)
-    val totalMass = freqs.agg(sum(expr("f * length(w)")).as("m"))
-      .collect()(0).getAs[Long]("m")
-    val top = freqs.orderBy(col("f").desc, col("w"))
+      .observe(mass, sum(expr("f * length(w)")).as("m"))
+      .orderBy(col("f").desc, col("w"))
       .limit(maxLexicon)
       .collect()
       .map(r => r.getString(0) -> r.getLong(1))
+    val totalMass = Sinks.obsLong(mass, "m")
     // Spark SQL length() counts code points; match it here (w.length is
     // UTF-16 units, which over-counts supplementary chars and could make
     // the "exact" droppedPairMass bound wrong or negative).
@@ -290,34 +446,52 @@ object Bpe {
   def trainOn(docs: DataFrame, vocabSize: Int = 64): Model =
     trainOnCov(wordFrequenciesWithCoverage(docs), vocabSize)
 
+  /** Bytes one task's word → ids memo may hold (estimated per entry as
+    * the key's UTF-16 units, the ids and 64 bytes of map and object
+    * overhead). Once full, further words are encoded without memoizing. */
+  private val EncodeCacheBytes = 32L << 20
+
+  private val WordSplit = java.util.regex.Pattern.compile("[ \t\n\f\r]+")
+
+  /** Memo of a word encoder. Built inside a udf closure, so it
+    * deserializes fresh with each task's closure and models never
+    * cross-pollute; a Zipf corpus pays `encodeWord` once per distinct
+    * word per task instead of once per occurrence. */
+  private final class EncodeCache(encodeWord: String => Array[Int]) extends Serializable {
+    private val memo = new java.util.HashMap[String, Array[Int]]()
+    private var bytes = 0L
+
+    /** The ids of every non-empty whitespace-separated word of `t`, in
+      * order: exactly the per-word arrays `encode(t)` concatenates. */
+    def words(t: String): Array[Array[Int]] =
+      WordSplit.split(t).filter(_.nonEmpty).map { w =>
+        var ids = memo.get(w)
+        if (ids == null) {
+          ids = encodeWord(w)
+          val cost = 64L + 2L * w.length + 4L * ids.length
+          if (bytes + cost <= EncodeCacheBytes) { memo.put(w, ids); bytes += cost }
+        }
+        ids
+      }
+  }
+
   /** Token-COUNT udf for any word-based encoder (encode =
-    * whitespace-split `flatMap encodeWord`): per-word encode lengths
-    * memoized in a per-TASK cache (the captured map deserializes fresh
-    * with each task's closure, so models never cross-pollute), so a
-    * Zipf corpus pays `encodeWord` once per distinct word per task
-    * instead of once per occurrence. `Σ length` is exactly
-    * `size(encode(text))`. */
+    * whitespace-split `flatMap encodeWord`) through a per-task
+    * [[EncodeCache]]. `Σ length` is exactly `size(encode(text))`, as a
+    * nullable bigint: the type `size(tokens).cast("long")` has, so a
+    * count column written in its place keeps its schema. */
   private[pipeline] def tokenCountUdf(encodeWord: String => Array[Int])
       : org.apache.spark.sql.expressions.UserDefinedFunction = udf {
-    val cache = new java.util.HashMap[String, Integer]()
-    (t: String) => {
-      val ws = t.split("[ \t\n\f\r]+")
-      var total = 0
-      var i = 0
-      while (i < ws.length) {
-        val w = ws(i)
-        if (w.nonEmpty) {
-          var c = cache.get(w)
-          if (c == null) {
-            c = Integer.valueOf(encodeWord(w).length)
-            if (cache.size < (1 << 20)) cache.put(w, c)
-          }
-          total += c.intValue()
-        }
-        i += 1
-      }
-      total
-    }
+    val cache = new EncodeCache(encodeWord)
+    (t: String) => java.lang.Long.valueOf(cache.words(t).foldLeft(0L)(_ + _.length))
+  }
+
+  /** Token-ids udf, equal to `encode(text)`, through a per-task
+    * [[EncodeCache]]; the cached arrays are copied, never returned. */
+  private[pipeline] def tokenIdsUdf(encodeWord: String => Array[Int])
+      : org.apache.spark.sql.expressions.UserDefinedFunction = udf {
+    val cache = new EncodeCache(encodeWord)
+    (t: String) => Array.concat(cache.words(t).toIndexedSeq: _*)
   }
 
   /** T7 over a BPE model trained on the same corpus: stats of the encoded

@@ -115,10 +115,18 @@ object MinHash {
     // broadcasts all carry it — and INT halves every one of those byte
     // counts. Arithmetic stays in longs above; only the storage narrows,
     // so values are unchanged and the DuckDB oracle (whose SQL twin
-    // keeps BIGINT lists) still agrees on every derived result.
+    // keeps BIGINT lists) still agrees on every derived result. A slot
+    // left at the Long.MaxValue sentinel (no shingle hash reached it)
+    // would wrap to -1 here, so the narrowing checks its own invariant.
     val out = new Array[Int](NumPerm)
     var k = 0
-    while (k < NumPerm) { out(k) = sig(k).toInt; k += 1 }
+    while (k < NumPerm) {
+      if (sig(k) >= P)
+        throw new IllegalStateException(
+          s"MinHash slot $k holds ${sig(k)} >= P from $n distinct shingle hashes")
+      out(k) = sig(k).toInt
+      k += 1
+    }
     out
   }
 

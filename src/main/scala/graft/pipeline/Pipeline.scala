@@ -153,43 +153,41 @@ object Pipeline {
     val (passed, qualityObs) = Sinks.observeStage(passed0, "quality")
 
     val tTrainStart = nowS
-    val out =
-      if (!cfg.tokenization.enabled) passed.withColumn("token_count", lit(null: java.lang.Long))
+    // tokenization.algorithm selects the trainer; all three models
+    // share the (train on driver-merged word frequencies, distributed
+    // per-word encode) contract — tokenizer.py:58-133's algorithm switch.
+    val encodeWord: Option[String => Array[Int]] =
+      if (!cfg.tokenization.enabled) None
       else {
-        // tokenization.algorithm selects the trainer; all three models
-        // share the (train on driver-merged word frequencies, distributed
-        // encode UDF) contract — tokenizer.py:58-133's algorithm switch.
         val freqs = Bpe.wordFrequencies(passed)
-        val enc: String => Array[Int] = cfg.tokenization.algorithm match {
-          case "unigram" =>
-            val m = Unigram.train(freqs, cfg.tokenization.vocabSize); m.encode
+        Some(cfg.tokenization.algorithm match {
+          case "unigram" => Unigram.train(freqs, cfg.tokenization.vocabSize).encodeWord
           case "wordpiece" =>
-            val m = WordPiece.train(
-              freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
-            m.encode
+            WordPiece.train(freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
+              .encodeWord
           case _ => // bpe default
-            val m = Bpe.train(
-              freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
-            m.encode
-        }
-        val encUdf = udf(enc)
-        passed.withColumn("tokens", encUdf(col("text")))
-          .withColumn("token_count", size(col("tokens")).cast("long"))
+            Bpe.train(freqs, cfg.tokenization.vocabSize, cfg.tokenization.minFrequency)
+              .encodeWord
+        })
       }
     val tTrainEnd = nowS
 
-    // S6/S7 final corpus + S8 tokens
-    val (outObsDf, tokenObs) = Sinks.observeStage(out, "tokenize",
+    // S6/S7 final corpus + S8 tokens. The documents sink needs only the
+    // count, so it runs the count udf and carries the tokenize
+    // observation; the tokens sink encodes each passed doc once. Both
+    // memoize per-word encodes per task, so neither persists anything.
+    val counted = encodeWord.fold(passed.withColumn("token_count", lit(null: java.lang.Long)))(
+      enc => passed.withColumn("token_count", Bpe.tokenCountUdf(enc)(col("text"))))
+    val (docsOut, tokenObs) = Sinks.observeStage(counted, "tokenize",
       sum(col("token_count")).as("total_tokens"))
-    val docsOut = outObsDf.drop("tokens")
     cfg.output.format match {
       case "jsonl" => Sinks.writeDocsJsonl(docsOut, s"$outDir/documents")
       case _ => Sinks.writeParquet(docsOut, s"$outDir/documents",
         cfg.output.maxRecordsPerFile, cfg.output.compression)
     }
     val tWriteEnd = nowS
-    if (cfg.tokenization.enabled)
-      Sinks.writeTokensJsonl(outObsDf.select("tokens"), s"$outDir/tokens")
+    encodeWord.foreach(enc => Sinks.writeTokensJsonl(
+      passed.select(Bpe.tokenIdsUdf(enc)(col("text")).as("tokens")), s"$outDir/tokens"))
 
     // S9: one-row summary straight from the resolved observations — the
     // reference's summary fields (src/main.py:407-420) with no re-scan.

@@ -33,9 +33,10 @@ class BpeTrainScaleSpec extends AnyFunSuite {
   }
 
   /** The original O(vocab × lexicon) recount trainer, kept here as the
-    * semantics reference for the incremental one. */
+    * semantics reference for the incremental one: the whole model, vocab
+    * ids included. */
   private def naiveTrain(wordFreq: Map[String, Long], vocabSize: Int,
-      minFreq: Long = 2L): List[(String, String)] = {
+      minFreq: Long = 2L): Bpe.Model = {
     val words: Array[(mutable.ArrayBuffer[String], Long)] =
       wordFreq.toArray.sortBy(_._1).map { case (w, f) =>
         (mutable.ArrayBuffer(w.map(_.toString): _*) += Bpe.EndOfWord, f)
@@ -75,16 +76,58 @@ class BpeTrainScaleSpec extends AnyFunSuite {
         }
       }
     }
-    merges.result()
+    val mergeList = merges.result()
+    val symbols = chars ++ mergeList.map { case (a, b) => a + b }
+    Bpe.Model((Bpe.Specials ++ symbols.distinct).zipWithIndex.toMap, mergeList)
+  }
+
+  private def assertParity(lex: Map[String, Long], vocabSize: Int, minFreq: Long,
+      what: String): Bpe.Model = {
+    val fast = Bpe.train(lex, vocabSize, minFreq)
+    val slow = naiveTrain(lex, vocabSize, minFreq)
+    assert(fast.merges == slow.merges, s"merge sequences diverge: $what")
+    assert(fast == slow, s"vocab diverges: $what")
+    fast
   }
 
   test("incremental trainer selects exactly the naive trainer's merges") {
-    for (seed <- 1L to 3L) {
-      val lex = syntheticLexicon(400, seed)
-      val fast = Bpe.train(lex, 300).merges
-      val slow = naiveTrain(lex, 300)
-      assert(fast == slow, s"merge sequences diverge for seed $seed")
-    }
+    for (seed <- 1L to 3L)
+      assertParity(syntheticLexicon(400, seed), 300, 2L, s"seed $seed")
+  }
+
+  test("naive parity: overlapping repeats, and merged strings equal to existing symbols") {
+    val repeats = Map[String, Long]("aaaa" -> 5L, "abab" -> 4L, "aaab" -> 3L, "aa" -> 2L,
+      "bbbb" -> 3L, "ababab" -> 2L, "baaa" -> 2L, "aaaaaaa" -> 1L)
+    assertParity(repeats, 60, 1L, "overlapping repeats")
+    // "<", "/", "w", ">" merge into a symbol spelled like the end-of-word
+    // sentinel; the naive trainer counts them as one symbol, so a trainer
+    // that gave the merged one its own id would diverge at merge 12.
+    val collide = Map[String, Long]("</w>x</w></w>" -> 2L, "</w><</w>" -> 3L,
+      "/wx</w>" -> 4L, "w>w>x</w>" -> 5L, "x<" -> 1L)
+    assertParity(collide, 60, 1L, "merged symbol spelled like the sentinel")
+  }
+
+  test("naive parity: non-BMP characters train as UTF-16 units") {
+    val lex = Map[String, Long]("\ud83d\ude00\ud83d\ude00" -> 3L, "a\ud83d\ude00b" -> 2L,
+      "\ud835\udd18\ud835\udd2b\ud835\udd26" -> 2L, "\ud83d\ude00a" -> 4L,
+      "\ud83d\ude01" -> 2L, "\u00e9t\u00e9" -> 3L)
+    val m = assertParity(lex, 50, 1L, "non-BMP")
+    assert(m.vocab.contains("\ud83d"), "a lone high surrogate is a base symbol")
+  }
+
+  test("naive parity: all-equal frequencies, every selection decided by a tie") {
+    val rnd = new scala.util.Random(7L)
+    val lex = (1 to 60).map(_ => Seq.fill(2 + rnd.nextInt(6))("abcde"(rnd.nextInt(5))).mkString)
+      .distinct.map(_ -> 1L).toMap
+    assertParity(lex, 120, 1L, "all frequencies 1")
+  }
+
+  test("naive parity: minFreq reached mid-run") {
+    val lex = syntheticLexicon(300, 5L) ++
+      Map[String, Long]("qqqq" -> 40L, "qqzz" -> 9L, "zzqq" -> 3L)
+    val minFreq = 300L
+    val m = assertParity(lex, 100000, minFreq, "minFreq mid-run")
+    assert(m.merges.nonEmpty && m.vocabSize < 100000, "the run stops on minFreq, not on the target")
   }
 
   /** CPU seconds consumed by THIS thread during `body` — the runtime pin

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.pipeline.{Pipeline, Quality}
+import graft.pipeline.{Bpe, Pipeline, Quality, Unigram, WordPiece}
 import org.apache.spark.sql.functions._
 
 /** Config-driven end-to-end run (reference src/main.py entry point 1). */
@@ -35,6 +35,54 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.json(s"$out/tokens").count() == 2L)
     assert(Files.readString(java.nio.file.Paths.get(s"$out/summary.json"))
       .contains("\"docs_ingested\":5"))
+  }
+
+  /** Passed docs that repeat words within and across documents, so the
+    * per-task encode memo serves most words from cache. */
+  private def tokenDocs = Seq(
+    (1L, good),
+    (2L, "The river runs past the old mill and the mill wheel turns as the river runs " +
+      "on toward the sea where the boats of the town wait for the morning tide to turn. " +
+      "Fishermen in the town say the river was wider once and the boats came up to the " +
+      "mill itself before the new bridge was built across the water by the town council."),
+    (3L, "A small garden behind the house grew beans and tomatoes and the beans climbed " +
+      "the fence while the tomatoes ripened slowly in the warm summer sun every year. " +
+      "The family that kept the garden shared the harvest with their neighbours and " +
+      "saved seeds from the best plants so that the next garden would grow even better."),
+    (4L, "Caf\u00e9 owners in the old quarter say the caf\u00e9 trade grew when the " +
+      "market moved closer and the market crowds stayed for coffee in the afternoon. " +
+      "Some of them now open early for the traders who set up their stalls before dawn " +
+      "and who come back again at noon for bread, soup and another cup of strong coffee.")
+  ).toDF("doc_id", "text")
+
+  test("token counts, summary and tokens JSONL agree with Model.encode (bpe, wordpiece, unigram)") {
+    for (algo <- Seq("bpe", "wordpiece", "unigram")) {
+      val out = Files.createTempDirectory("pipe").toString
+      val tk = Pipeline.TokenizationConfig(algorithm = algo, vocabSize = 80)
+      val summary = Pipeline.run(tokenDocs, Pipeline.GraftConfig(tokenization = tk), out)
+        .collect().head
+      val written = spark.read.parquet(s"$out/documents")
+      val lines = spark.read.schema("tokens array<int>").json(s"$out/tokens")
+      assert(written.count() >= 3L, s"$algo: too few docs passed to exercise the encode")
+      val docTokens = written.agg(sum(col("token_count"))).head().getLong(0)
+      val lineTokens = lines.agg(sum(size(col("tokens")))).head().getLong(0)
+      assert(docTokens == summary.getAs[Long]("total_tokens"), algo)
+      assert(lineTokens == docTokens, algo)
+      // the same model, retrained from the passed texts, encoded uncached
+      val freqs = Bpe.wordFrequencies(written)
+      val encode: String => Array[Int] = algo match {
+        case "bpe" => Bpe.train(freqs, tk.vocabSize, tk.minFrequency).encode
+        case "wordpiece" => WordPiece.train(freqs, tk.vocabSize, tk.minFrequency).encode
+        case "unigram" => Unigram.train(freqs, tk.vocabSize).encode
+      }
+      val texts = written.select("text").as[String].collect()
+      val expected = texts.map(t => encode(t).mkString(" ")).sorted.toSeq
+      val actual = lines.as[Seq[Int]].collect().map(_.mkString(" ")).sorted.toSeq
+      assert(actual == expected, s"$algo: token arrays differ from Model.encode")
+      val counts = written.select("text", "token_count").as[(String, Long)].collect()
+      assert(counts.forall { case (t, n) => encode(t).length.toLong == n },
+        s"$algo: token_count differs from size(Model.encode(text))")
+    }
   }
 
   test("pipeline_metrics.json carries the reference report fields (A6)") {
